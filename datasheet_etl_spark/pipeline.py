@@ -11,12 +11,12 @@ output/lmr51430_v04.json) is testable end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datasheet_etl_spark.functions import slugify
-from datasheet_etl_spark.verify import VerifyResult, verify
+from datasheet_etl_spark.verify import DEFAULT_CONFIDENCE_THRESHOLD, VerifyResult, verify
 
 TABLE_SCHEMA = T.StructType(
     [
@@ -100,82 +100,63 @@ def mock_rule_tables(spark: SparkSession, doc_key: str = "lmr51430.pdf") -> Data
     )
 
 
+def _parameters(rows: Column) -> Column:
+    """A1 parameter flatten, reference semantics (pipeline.py:345-367):
+    per row, ``{slug}_min/typ/max`` as float (plain float() parse —
+    unparseable silently dropped) and ``{slug}_unit`` when non-empty, in
+    row order then min/typ/max/unit (the reference's insertion order).
+
+    array<struct<pos, param, value_num, value_str>>: exactly one of
+    value_num / value_str is non-NULL."""
+
+    def per_row(row, pos):
+        slug = slugify(F.coalesce(F.element_at(row, F.lit("Parameter")), F.lit("")))
+
+        def entry(suffix, value_num, value_str):
+            return F.struct(
+                pos.alias("pos"),
+                F.concat(slug, F.lit(suffix)).alias("param"),
+                value_num.cast("double").alias("value_num"),
+                value_str.cast("string").alias("value_str"),
+            )
+
+        entries = []
+        for stat in ("Min", "Typ", "Max"):
+            num = F.element_at(row, F.lit(stat)).try_cast("double")
+            entries.append(F.when(num.isNotNull(), entry(f"_{stat.lower()}", num, F.lit(None))))
+        unit = F.element_at(row, F.lit("Unit"))
+        entries.append(F.when(unit != "", entry("_unit", F.lit(None), unit)))
+        return F.filter(F.array(*entries), lambda p: p.isNotNull())
+
+    return F.flatten(F.transform(rows, per_row))
+
+
 def extract_parameters(final_tables: DataFrame, key: str = "key") -> DataFrame:
-    """A1 parameter flatten (long→wide), reference semantics
-    (pipeline.py:345-367): per row, ``{slug}_min/typ/max`` as float
-    (plain float() parse — unparseable silently dropped) and
-    ``{slug}_unit`` when non-empty.
-
-    Returns long form: (key, param, value_num, value_str) where exactly
-    one of value_num / value_str is non-NULL. The wide map/pivot shapes
-    are built on top (``parameters_map``, dynamic pivot S10).
-    """
-    rows = final_tables.select(key, F.posexplode("rows").alias("pos", "row_map"))
-    slug = slugify(F.coalesce(F.element_at("row_map", F.lit("Parameter")), F.lit("")))
-
-    stats = rows.select(
-        key,
-        "pos",
-        slug.alias("slug"),
-        F.expr(
-            "stack(3, 'min', row_map['Min'], 'typ', row_map['Typ'], 'max', row_map['Max'])"
-        ).alias("stat", "raw"),
-    ).select(
-        key,
-        "pos",
-        F.concat("slug", F.lit("_"), "stat").alias("param"),
-        F.col("stat"),
-        F.col("raw"),
+    """Flat parameters in long form: (key, pos, param, value_num,
+    value_str), one row per entry of :func:`_parameters`. The wide shapes
+    are built on top (``parameters_json``, dynamic pivot S10)."""
+    return final_tables.select(key, F.explode(_parameters(F.col("rows"))).alias("p")).select(
+        key, "p.*"
     )
-    nums = stats.filter(
-        (F.col("raw").isNotNull())
-        & (F.col("raw") != "")
-        & F.col("raw").try_cast("double").isNotNull()
-    ).select(
-        key, "pos", "param", F.col("raw").try_cast("double").alias("value_num"),
-        F.lit(None).cast("string").alias("value_str"),
-    )
-    units = rows.select(
-        key,
-        "pos",
-        F.concat(slug, F.lit("_unit")).alias("param"),
-        F.lit(None).cast("double").alias("value_num"),
-        F.element_at("row_map", F.lit("Unit")).alias("value_str"),
-    ).filter(F.col("value_str").isNotNull() & (F.col("value_str") != ""))
-    return nums.unionByName(units)
 
 
-def parameters_map(params: DataFrame, key: str = "key") -> DataFrame:
-    """Flat parameters as one JSON object string per document (ordered by
-    row position then min/typ/max/unit — the reference's insertion
-    order). JSON because the value type is float|string (survey §1.2:
-    truly-Any becomes a JSON string column)."""
-    stat_rank = (
-        F.when(F.col("param").endswith("_min"), 1)
-        .when(F.col("param").endswith("_typ"), 2)
-        .when(F.col("param").endswith("_max"), 3)
-        .otherwise(4)
+def _parameters_json(params: Column) -> Column:
+    """Flat parameters as one JSON object string (NULL when none). JSON
+    because the value type is float|string (survey §1.2: truly-Any
+    becomes a JSON string column)."""
+    entries = F.transform(
+        params,
+        lambda p: F.concat(
+            F.lit('"'),
+            p["param"],
+            F.lit('": '),
+            F.when(p["value_num"].isNotNull(), p["value_num"].cast("string")).otherwise(
+                F.concat(F.lit('"'), p["value_str"], F.lit('"'))
+            ),
+        ),
     )
-    jval = F.when(
-        F.col("value_num").isNotNull(), F.col("value_num").cast("string")
-    ).otherwise(F.concat(F.lit('"'), F.col("value_str"), F.lit('"')))
-    entry = F.concat(F.lit('"'), F.col("param"), F.lit('": '), jval)
-    ordered = params.withColumn("stat_rank", stat_rank)
-    return (
-        ordered.groupBy(key)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "stat_rank", entry.alias("entry")))
-            ).alias("entries")
-        )
-        .select(
-            key,
-            F.concat(
-                F.lit("{"),
-                F.array_join(F.transform("entries", lambda s: s["entry"]), ", "),
-                F.lit("}"),
-            ).alias("parameters_json"),
-        )
+    return F.when(
+        F.size(params) > 0, F.concat(F.lit("{"), F.array_join(entries, ", "), F.lit("}"))
     )
 
 
@@ -186,14 +167,13 @@ def run_pipeline(
     source_file: str | None = None,
     confidence_threshold: float | None = None,
 ) -> tuple[DataFrame, VerifyResult]:
-    """Assemble the full result DataFrame: one row per document with
+    """Assemble the full result DataFrame: one row per vision table with
     metadata / verification / tables / parameters_json / conflicts —
-    parsed-equal to the reference's result JSON.
+    parsed-equal to the reference's result JSON. A projection of the
+    verification frame: no further join or shuffle.
 
     ``confidence_threshold`` routes docs below it to needs_review (the
     CLI maps Gold/Silver/Bronze accuracy tiers onto it)."""
-    from datasheet_etl_spark.verify import DEFAULT_CONFIDENCE_THRESHOLD
-
     vision = vision if vision is not None else mock_vision_tables(spark)
     rule = rule if rule is not None else mock_rule_tables(spark)
 
@@ -206,67 +186,45 @@ def run_pipeline(
             else confidence_threshold
         ),
     )
-    params = extract_parameters(vr.final_tables)
-    pmap = parameters_map(params)
-
-    conflicts_arr = (
-        vr.conflicts.groupBy("key")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("field"),
-                        F.col("vision_value"),
-                        F.col("rule_value"),
-                        F.lower("severity").alias("severity"),
-                        F.col("resolution"),
-                        F.col("resolved_value"),
-                    )
-                )
-            ).alias("conflicts")
-        )
-    )
-
-    table_struct = F.struct(
-        F.col("table_id"),
-        F.col("title"),
-        F.col("headers"),
-        F.col("rows"),
-        F.col("confidence"),
-        F.col("extraction_method"),
-        F.col("model"),
-        F.col("cost_usd"),
-    )
-    tables = vr.final_tables.select("key", table_struct.alias("table"))
-
-    result = (
-        vr.verdicts.join(tables, "key", "left")
-        .join(pmap, "key", "left")
-        .join(conflicts_arr, "key", "left")
-        .select(
-            "key",
+    v = F.col("verdict")
+    result = vr.tables.select(
+        "key",
+        F.struct(
+            F.col("key").alias("source_file"),
+            F.lit("0.4").alias("pipeline_version"),
+            F.lit("vision_first_double_verified").alias("extraction_method"),
+            F.lit("gpt-4o-mini").alias("vision_model"),
+        ).alias("metadata"),
+        F.struct(
+            v["status"].alias("status"),
+            F.round(v["confidence"], 3).alias("confidence"),
+            v["resolution_method"].alias("resolution_method"),
+            v["conflict_count"].alias("conflict_count"),
+        ).alias("verification"),
+        F.array(
             F.struct(
-                F.col("key").alias("source_file"),
-                F.lit("0.4").alias("pipeline_version"),
-                F.lit("vision_first_double_verified").alias("extraction_method"),
-                F.lit("gpt-4o-mini").alias("vision_model"),
-            ).alias("metadata"),
-            F.struct(
-                F.col("status"),
-                F.round("confidence", 3).alias("confidence"),
-                F.col("resolution_method"),
-                F.col("conflict_count"),
-            ).alias("verification"),
-            F.array(F.col("table")).alias("tables"),
-            F.col("parameters_json"),
-            F.coalesce(
-                F.col("conflicts"),
-                F.array().cast(
-                    "array<struct<field:string,vision_value:string,rule_value:string,"
-                    "severity:string,resolution:string,resolved_value:string>>"
-                ),
-            ).alias("conflicts"),
-        )
+                "table_id",
+                "title",
+                "headers",
+                "rows",
+                "confidence",
+                "extraction_method",
+                "model",
+                "cost_usd",
+            )
+        ).alias("tables"),
+        _parameters_json(_parameters(F.col("rows"))).alias("parameters_json"),
+        F.transform(
+            "conflicts",
+            lambda c: F.struct(
+                c["field"].alias("field"),
+                c["vision_value"].alias("vision_value"),
+                c["rule_value"].alias("rule_value"),
+                F.lower(c["severity"]).alias("severity"),
+                c["resolution"].alias("resolution"),
+                c["resolved_value"].alias("resolved_value"),
+            ),
+        ).alias("conflicts"),
     )
     return result, vr
 

@@ -1,16 +1,17 @@
 """The double-verification dataflow (survey §2.5, V1–V15 + J1/J5).
 
-Reference semantics (behavioral spec: double_verifier.py:304-644) as one
-declarative DataFrame DAG:
+Reference semantics (behavioral spec: double_verifier.py:304-644) as ONE
+per-document plan:
 
-    vision tables ─┬─ posexplode rows ─ inner join on (key, pos) ─ key-union
-    rule tables  ──┘        │
-                            ├─ cell conflicts (V4 mismatch → V5 type → V6 severity)
-                            ├─ header conflict (V7)
-                            ├─ metadata conflicts (title / table_id)
-                            ├─ arbitration (V8: unit → rule_wins else vision_wins)
-                            ├─ patch-back join (J5) → final tables
-                            └─ per-table aggregate (V10 confidence → V12 status)
+    rule tables ── group by key ──┐
+    vision tables ────────────────┴─ left join on key ─ per vision table,
+        over every rule table of its key:
+          ├─ cell conflicts (J1 zip → V4 mismatch → V5 type → V6 severity)
+          ├─ header conflict (V7), metadata conflicts (title / table_id)
+          └─ arbitration (V8: unit → rule_wins else vision_wins)
+        then, over the table's sorted conflicts array:
+          ├─ V10 confidence → V11 large diff → V12 status
+          └─ J5 patch-back → final rows (header order, empty rows dropped)
 
 Input table schema (both sides):
     key: string               -- document/table grouping key
@@ -19,20 +20,29 @@ Input table schema (both sides):
     rows: array<map<string,string>>
 plus passthrough columns on the vision side (confidence, model, …).
 
-The zip truncation of ``zip(v_rows, r_rows)`` is reproduced by the inner
-join on (key, pos) — never widen it to outer (survey §7.4.2).
+The zip truncation of ``zip(v_rows, r_rows)`` is reproduced by slicing
+both row arrays to the shorter one — never pad it (survey §7.4.2).
 
-Scale notes: one shuffle per side on ``key`` feeds the position window,
-the conflict join, and the re-grouping — Catalyst reuses the hash
-partitioning. The conflict stream is tiny relative to the cell stream
-(it's post-filter), so the patch-back join broadcasts in practice.
+Repeated keys: each vision table is its own result, verified against
+every rule table of its key (conflicts per (vision, rule) pair); a key
+without rule tables is vision_only.
+
+Scale notes: each input is scanned once. The rule side is shuffled once,
+by its group-by on key; the grouped rules are broadcast to the vision
+scan while small, and otherwise meet it in a sort-merge join that
+shuffles the vision side by key too. All per-cell work runs inside the
+row that owns it with native higher-order functions (``transform``,
+``filter``, ``aggregate``, ``array_sort``), so no cell stream is ever
+materialised or re-joined. Lambdas are interpreted rather than
+code-generated; at datasheet table sizes (tens of rows per table) that
+costs far less than exploding cells into rows and shuffling them.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datasheet_etl_spark.functions import (
@@ -48,17 +58,31 @@ DEFAULT_CONFIDENCE_THRESHOLD = 0.60
 
 @dataclass
 class VerifyResult:
-    """The three outputs of the verification dataflow."""
+    """The verification frame and its three classic projections.
 
-    conflicts: DataFrame  # key, field, vision_value, rule_value, severity, conflict_type, resolution, resolved_value
-    verdicts: DataFrame   # key, status, confidence, resolution_method, conflict_count
-    final_tables: DataFrame  # key, table_id, title, headers, rows (patched)
+    ``tables`` has one row per vision table: its columns (``rows``
+    patched), the sorted ``conflicts`` array and a ``verdict`` struct."""
 
+    tables: DataFrame
+    key: str = "key"
 
-def _cells(df: DataFrame, key: str) -> DataFrame:
-    return df.select(
-        key, F.posexplode_outer("rows").alias("pos", "row_map")
-    )
+    @property
+    def conflicts(self) -> DataFrame:
+        """key, field, vision_value, rule_value, severity, conflict_type,
+        resolution, resolved_value"""
+        return self.tables.select(self.key, F.explode("conflicts").alias("c")).select(
+            self.key, "c.*"
+        )
+
+    @property
+    def verdicts(self) -> DataFrame:
+        """key, status, confidence, resolution_method, conflict_count"""
+        return self.tables.select(self.key, "verdict.*")
+
+    @property
+    def final_tables(self) -> DataFrame:
+        """The vision tables with their rows patched (J5)."""
+        return self.tables.drop("conflicts", "verdict")
 
 
 def _pyliststr(arr) -> F.Column:
@@ -70,109 +94,98 @@ def _pyliststr(arr) -> F.Column:
     )
 
 
-def find_conflicts(vision: DataFrame, rule: DataFrame, key: str = "key") -> DataFrame:
-    """All conflicts between the two extractions (ref: _find_conflicts,
-    double_verifier.py:412-475) as one unioned DataFrame."""
-    v_cells = _cells(vision, key).withColumnRenamed("row_map", "v_row")
-    r_cells = _cells(rule, key).withColumnRenamed("row_map", "r_row")
-    zipped = v_cells.join(r_cells, [key, "pos"], "inner")  # J1 zip truncation
-
-    # key union across both row dicts, then per-field compare
-    fields = zipped.select(
-        key,
-        "pos",
-        "v_row",
-        "r_row",
-        F.explode(F.array_union(F.map_keys("v_row"), F.map_keys("r_row"))).alias("fkey"),
-    ).select(
-        key,
-        "pos",
-        "fkey",
-        F.coalesce(F.element_at("v_row", F.col("fkey")), F.lit("")).alias("vision_value"),
-        F.coalesce(F.element_at("r_row", F.col("fkey")), F.lit("")).alias("rule_value"),
-        F.coalesce(F.element_at("v_row", F.lit("Parameter")), F.lit("")).alias("param_ctx"),
-    )
-    cell_conflicts = fields.filter(
-        ~values_match(F.col("vision_value"), F.col("rule_value"))
-    ).select(
-        key,
-        F.concat(F.lit("row["), F.col("pos").cast("string"), F.lit("]."), F.col("fkey")).alias(
-            "field"
-        ),
-        "vision_value",
-        "rule_value",
-        assess_severity(
-            F.col("fkey"), F.col("vision_value"), F.col("rule_value"), F.col("param_ctx")
-        ).alias("severity"),
-        classify_conflict(F.col("fkey"), F.col("vision_value")).alias("conflict_type"),
-    )
-
-    # header (structure) conflict — V7
-    hdr = (
-        vision.select(key, F.col("headers").alias("v_headers"))
-        .join(rule.select(key, F.col("headers").alias("r_headers")), key, "inner")
-        .filter(F.col("v_headers") != F.col("r_headers"))
-        .select(
-            key,
-            F.lit("headers").alias("field"),
-            _pyliststr(F.col("v_headers")).alias("vision_value"),
-            _pyliststr(F.col("r_headers")).alias("rule_value"),
-            F.lit("MEDIUM").alias("severity"),
-            F.lit("structure").alias("conflict_type"),
-        )
-    )
-
-    # metadata conflicts (title, table_id) — both non-empty and mismatched
-    meta_parts = []
-    for fld in ("title", "table_id"):
-        v = vision.select(key, F.coalesce(F.col(fld), F.lit("")).alias("vision_value"))
-        r = rule.select(key, F.coalesce(F.col(fld), F.lit("")).alias("rule_value"))
-        meta_parts.append(
-            v.join(r, key, "inner")
-            .filter(
-                (F.col("vision_value") != "")
-                & (F.col("rule_value") != "")
-                & ~values_match(F.col("vision_value"), F.col("rule_value"))
-            )
-            .select(
-                key,
-                F.lit(fld).alias("field"),
-                "vision_value",
-                "rule_value",
-                F.lit("LOW").alias("severity"),
-                F.lit("text").alias("conflict_type"),
-            )
-        )
-
-    out = cell_conflicts
-    for part in [hdr, *meta_parts]:
-        out = out.unionByName(part)
-    return out
-
-
-def arbitrate(conflicts: DataFrame) -> DataFrame:
+def _smart_resolution(conflict_type: Column) -> Column:
     """V8 SmartArbiter: unit conflicts → rule_wins, everything else →
-    vision_wins (ref: double_verifier.py:206-236); resolved_value follows
-    the winner."""
-    resolution = F.when(F.col("conflict_type") == "unit", "rule_wins").otherwise(
-        "vision_wins"
-    )
-    return conflicts.withColumn("resolution", resolution).withColumn(
-        "resolved_value",
-        F.when(F.col("resolution") == "rule_wins", F.col("rule_value")).otherwise(
-            F.col("vision_value")
-        ),
+    vision_wins (ref: double_verifier.py:206-236)."""
+    return F.when(conflict_type == "unit", "rule_wins").otherwise("vision_wins")
+
+
+def _resolved_value(resolution: Column, vision_value: Column, rule_value: Column) -> Column:
+    return F.when(resolution == "rule_wins", rule_value).otherwise(vision_value)
+
+
+def _cell_field(pos: Column, k: Column) -> Column:
+    """A cell conflict's field name: ``row[<pos>].<key>``."""
+    return F.concat(F.lit("row["), pos.cast("string"), F.lit("]."), k)
+
+
+def _conflict(field, vision_value, rule_value, severity, conflict_type) -> Column:
+    resolution = _smart_resolution(conflict_type)
+    return F.struct(
+        field.alias("field"),
+        vision_value.alias("vision_value"),
+        rule_value.alias("rule_value"),
+        severity.alias("severity"),
+        conflict_type.alias("conflict_type"),
+        resolution.alias("resolution"),
+        _resolved_value(resolution, vision_value, rule_value).alias("resolved_value"),
     )
 
 
-def score_and_status(
-    vision: DataFrame,
-    rule: DataFrame,
-    resolved: DataFrame,
-    key: str = "key",
-    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
-) -> DataFrame:
-    """V10 confidence + V11 large-diff + V12 status per table.
+def _cell_conflicts(v_rows: Column, r_rows: Column) -> Column:
+    """V4–V6 over the zipped rows (J1: the longer side's tail is never
+    compared), per field of the key union of both row maps."""
+
+    def row_conflicts(v_row, pos):
+        r_row = r_rows[pos]
+        cells = F.transform(
+            F.coalesce(F.array_union(F.map_keys(v_row), F.map_keys(r_row)), F.array()),
+            lambda k: F.struct(
+                k.alias("k"),
+                F.coalesce(F.element_at(v_row, k), F.lit("")).alias("v"),
+                F.coalesce(F.element_at(r_row, k), F.lit("")).alias("r"),
+            ),
+        )
+        param_ctx = F.coalesce(F.element_at(v_row, F.lit("Parameter")), F.lit(""))
+        return F.transform(
+            F.filter(cells, lambda c: ~values_match(c["v"], c["r"])),
+            lambda c: _conflict(
+                _cell_field(pos, c["k"]),
+                c["v"],
+                c["r"],
+                assess_severity(c["k"], c["v"], c["r"], param_ctx),
+                classify_conflict(c["k"], c["v"]),
+            ),
+        )
+
+    n = F.least(F.size(v_rows), F.size(r_rows))
+    return F.flatten(F.transform(F.slice(v_rows, 1, n), row_conflicts))
+
+
+def _pair_conflicts(r: Column) -> Column:
+    """Every conflict between this vision table and rule table ``r``
+    (ref: _find_conflicts, double_verifier.py:412-475)."""
+    v_headers, r_headers = F.col("headers"), r["headers"]
+    structural = [
+        F.when(
+            v_headers != r_headers,
+            _conflict(
+                F.lit("headers"),
+                _pyliststr(v_headers),
+                _pyliststr(r_headers),
+                F.lit("MEDIUM"),
+                F.lit("structure"),
+            ),
+        )
+    ]
+    # metadata (title, table_id): both non-empty and mismatched
+    for fld in ("title", "table_id"):
+        v = F.coalesce(F.col(fld), F.lit(""))
+        rv = F.coalesce(r[fld], F.lit(""))
+        structural.append(
+            F.when(
+                (v != "") & (rv != "") & ~values_match(v, rv),
+                _conflict(F.lit(fld), v, rv, F.lit("LOW"), F.lit("text")),
+            )
+        )
+    return F.concat(
+        _cell_conflicts(F.coalesce(F.col("rows"), F.array()), F.coalesce(r["rows"], F.array())),
+        F.filter(F.array(*structural), lambda c: c.isNotNull()),
+    )
+
+
+def _verdict(conflicts: Column, has_rule: Column, confidence_threshold: float) -> Column:
+    """V10 confidence + V11 large-diff + V12 status.
 
     Mirrors the reference decision ladder (double_verifier.py:304-398):
     no rule table → verified @0.85 vision_only; zero conflicts →
@@ -180,152 +193,71 @@ def score_and_status(
     >10% diff) → needs_review; confidence < threshold → conflict; else
     verified (auto_resolved).
     """
-    per_key = resolved.groupBy(key).agg(
-        F.count("*").alias("conflict_count"),
-        F.greatest(
-            F.lit(0.0),
-            F.least(
-                F.lit(1.0),
-                1.0
-                - F.sum(
-                    severity_penalty(F.col("severity"), F.col("resolution").isNotNull())
-                ),
+    penalty = F.aggregate(
+        conflicts,
+        F.lit(0.0),
+        lambda acc, c: acc + severity_penalty(c["severity"], c["resolution"].isNotNull()),
+    )
+    scored = F.greatest(F.lit(0.0), F.least(F.lit(1.0), 1.0 - penalty))
+    needs_review = F.exists(
+        conflicts,
+        lambda c: (c["severity"].isin("HIGH", "CRITICAL") & c["resolution"].isNull())
+        | (
+            (c["severity"] == "CRITICAL")
+            & (pct_diff(c["vision_value"], c["rule_value"]) > 0.10)
+        ),
+    )
+    n = F.size(conflicts)
+
+    def ladder(no_rule, clean, review, low, ok):
+        return (
+            F.when(~has_rule, no_rule)
+            .when(n == 0, clean)
+            .when(needs_review, review)
+            .when(scored < confidence_threshold, low)
+            .otherwise(ok)
+        )
+
+    return F.struct(
+        ladder("verified", "verified", "needs_review", "conflict", "verified").alias("status"),
+        F.when(~has_rule, 0.85).when(n == 0, 1.0).otherwise(scored).alias("confidence"),
+        ladder(
+            "vision_only", "perfect_match", "manual_required", "low_confidence", "auto_resolved"
+        ).alias("resolution_method"),
+        n.cast("bigint").alias("conflict_count"),
+    )
+
+
+def _patched_rows(rows: Column, conflicts: Column) -> Column:
+    """J5 patch-back: the vision rows with every rule_wins cell
+    overwritten, keys in header order (unknown keys last, by name);
+    empty and null row maps dropped, no rows → []."""
+    fixes = F.filter(conflicts, lambda c: c["resolution"] == "rule_wins")
+    headers = F.col("headers")
+
+    def patch(row, pos):
+        def entry(k):
+            field = _cell_field(pos, k)
+            fix = F.get(F.filter(fixes, lambda c: c["field"] == field), 0)["resolved_value"]
+            korder = F.when(
+                F.array_position(headers, k) > 0, F.array_position(headers, k)
+            ).otherwise(F.lit(1_000_000))
+            return F.struct(
+                korder.alias("korder"),
+                k.alias("key"),
+                F.coalesce(fix, F.element_at(row, k)).alias("value"),
+            )
+
+        entries = F.array_sort(F.transform(F.map_keys(row), entry))
+        return F.when(
+            F.size(row) > 0,
+            F.map_from_entries(
+                F.transform(entries, lambda e: F.struct(e["key"], e["value"]))
             ),
-        ).alias("confidence"),
-        F.count_if(
-            F.col("severity").isin("HIGH", "CRITICAL") & F.col("resolution").isNull()
-        ).alias("n_unresolved_high"),
-        F.count_if(F.col("severity") == "CRITICAL").alias("n_critical"),
-        F.coalesce(
-            F.max(
-                F.when(
-                    F.col("severity") == "CRITICAL",
-                    pct_diff(F.col("vision_value"), F.col("rule_value")),
-                )
-            ),
-            F.lit(0.0),
-        ).alias("max_critical_diff"),
-    )
-
-    has_rule = rule.select(key).distinct().withColumn("__has_rule", F.lit(True))
-    base = (
-        vision.select(key)
-        .distinct()
-        .join(has_rule, key, "left")
-        .join(per_key, key, "left")
-    )
-
-    needs_review = (F.col("n_unresolved_high") > 0) | (
-        (F.col("n_critical") > 0) & (F.col("max_critical_diff") > 0.10)
-    )
-    status = (
-        F.when(F.col("__has_rule").isNull(), "verified")
-        .when(F.col("conflict_count").isNull(), "verified")
-        .when(needs_review, "needs_review")
-        .when(F.col("confidence") < confidence_threshold, "conflict")
-        .otherwise("verified")
-    )
-    method = (
-        F.when(F.col("__has_rule").isNull(), "vision_only")
-        .when(F.col("conflict_count").isNull(), "perfect_match")
-        .when(needs_review, "manual_required")
-        .when(F.col("confidence") < confidence_threshold, "low_confidence")
-        .otherwise("auto_resolved")
-    )
-    confidence = (
-        F.when(F.col("__has_rule").isNull(), 0.85)
-        .when(F.col("conflict_count").isNull(), 1.0)
-        .otherwise(F.col("confidence"))
-    )
-    return base.select(
-        key,
-        status.alias("status"),
-        confidence.alias("confidence"),
-        method.alias("resolution_method"),
-        F.coalesce(F.col("conflict_count"), F.lit(0)).alias("conflict_count"),
-    )
-
-
-def patch_final_tables(
-    vision: DataFrame, resolved: DataFrame, key: str = "key"
-) -> DataFrame:
-    """J5 patch-back: start from the vision result, overwrite the cells
-    (and metadata fields) that resolved rule_wins, and rebuild the nested
-    rows arrays with deterministic field order (header order)."""
-    rule_wins = resolved.filter(F.col("resolution") == "rule_wins")
-
-    cell_fixes = rule_wins.filter(F.col("field").rlike(r"^row\[\d+\]\..+")).select(
-        key,
-        # try_cast: constant folding may evaluate this on non-row fields
-        # before the rlike filter applies (ANSI would throw on '')
-        F.regexp_extract("field", r"^row\[(\d+)\]", 1).try_cast("int").alias("pos"),
-        F.regexp_extract("field", r"^row\[\d+\]\.(.+)$", 1).alias("fkey"),
-        F.col("resolved_value").alias("fix"),
-    )
-
-    cells = (
-        _cells(vision, key)
-        .select(
-            key,
-            "pos",
-            F.explode(F.map_keys("row_map")).alias("fkey"),
-            F.col("row_map"),
         )
-        .select(
-            key, "pos", "fkey", F.element_at("row_map", F.col("fkey")).alias("val")
-        )
-    )
-    patched = cells.join(cell_fixes, [key, "pos", "fkey"], "left").select(
-        key, "pos", "fkey", F.coalesce("fix", "val").alias("val")
-    )
 
-    # deterministic field order: position in the headers array (unknown keys last)
-    with_order = patched.join(vision.select(key, "headers"), key, "left").select(
-        key,
-        "pos",
-        F.when(
-            F.array_position("headers", F.col("fkey")) > 0,
-            F.array_position("headers", F.col("fkey")),
-        )
-        .otherwise(F.lit(1_000_000))
-        .alias("korder"),
-        "fkey",
-        "val",
-    )
-    # entries arrays (orderable, unlike maps) so the outer sort by pos works
-    rows_rebuilt = with_order.groupBy(key, "pos").agg(
-        F.array_sort(F.collect_list(F.struct("korder", "fkey", "val"))).alias("entries")
-    )
-    tables_rows = rows_rebuilt.groupBy(key).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("entries")))),
-            lambda s: F.map_from_entries(
-                F.transform(
-                    s["entries"],
-                    lambda e: F.struct(e["fkey"].alias("key"), e["val"].alias("value")),
-                )
-            ),
-        ).alias("rows")
-    )
-
-    # metadata patch (title / table_id) — with SmartArbiter these stay
-    # vision, but the join is general.
-    meta = vision.drop("rows")
-    for fld in ("title", "table_id"):
-        fix = (
-            rule_wins.filter(F.col("field") == fld)
-            .select(key, F.col("resolved_value").alias(f"__fix_{fld}"))
-        )
-        meta = (
-            meta.join(fix, key, "left")
-            .withColumn(fld, F.coalesce(F.col(f"__fix_{fld}"), F.col(fld)))
-            .drop(f"__fix_{fld}")
-        )
-    # row-less tables get no tables_rows entry; the reference's
-    # final_result preserves the original [] rather than null
-    return meta.join(tables_rows, key, "left").withColumn(
-        "rows",
-        F.coalesce(F.col("rows"), F.array().cast("array<map<string,string>>")),
+    return F.coalesce(
+        F.filter(F.transform(rows, patch), lambda m: m.isNotNull()), F.array()
     )
 
 
@@ -335,12 +267,27 @@ def verify(
     key: str = "key",
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
 ) -> VerifyResult:
-    """Run the full double-verification dataflow."""
-    conflicts = find_conflicts(vision, rule, key)
-    resolved = arbitrate(conflicts)
-    verdicts = score_and_status(vision, rule, resolved, key, confidence_threshold)
-    final_tables = patch_final_tables(vision, resolved, key)
-    return VerifyResult(conflicts=resolved, verdicts=verdicts, final_tables=final_tables)
+    """Run the full double-verification dataflow as one per-document plan.
+
+    One result row per vision table, verified against every rule table of
+    its key; a vision key repeated on several tables yields one result
+    row per table. The vision side's ``verdict`` and ``conflicts``
+    column names are taken by the outputs."""
+    rules = rule.groupBy(key).agg(
+        F.collect_list(F.struct("headers", "title", "table_id", "rows")).alias("__rules")
+    )
+    conflicts = F.flatten(F.transform("__rules", _pair_conflicts))
+    tables = (
+        vision.join(rules, key, "left")
+        .withColumn("conflicts", F.array_sort(F.coalesce(conflicts, F.array())))
+        .withColumn(
+            "verdict",
+            _verdict(F.col("conflicts"), F.col("__rules").isNotNull(), confidence_threshold),
+        )
+        .withColumn("rows", _patched_rows(F.col("rows"), F.col("conflicts")))
+        .drop("__rules")
+    )
+    return VerifyResult(tables, key)
 
 
 def review_queue(verdicts: DataFrame) -> DataFrame:
@@ -427,9 +374,7 @@ COMPARATORS: dict = _builtin_comparators()
 
 # name → (conflicts: DataFrame) -> Column<string resolution>
 ARBITERS: dict = {
-    "smart": lambda df: F.when(
-        F.col("conflict_type") == "unit", "rule_wins"
-    ).otherwise("vision_wins"),
+    "smart": lambda df: _smart_resolution(F.col("conflict_type")),
     "vision_wins": lambda df: F.lit("vision_wins"),
     "rule_wins": lambda df: F.lit("rule_wins"),
 }
@@ -457,11 +402,9 @@ def custom_match(v1, v2, comparator_names=None):
 
 
 def arbitrate_with(conflicts: DataFrame, arbiter: str = "smart") -> DataFrame:
-    """arbitrate() with a registry-selected arbiter (U2)."""
+    """Resolve a conflicts frame with a registry-selected arbiter (U2)."""
     resolution = ARBITERS[arbiter](conflicts)
     return conflicts.withColumn("resolution", resolution).withColumn(
         "resolved_value",
-        F.when(F.col("resolution") == "rule_wins", F.col("rule_value")).otherwise(
-            F.col("vision_value")
-        ),
+        _resolved_value(F.col("resolution"), F.col("vision_value"), F.col("rule_value")),
     )

@@ -5,12 +5,15 @@ resolved vision_wins, 14 flat parameters)."""
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from datasheet_etl_spark.pipeline import (
+    extract_parameters,
     mock_rule_tables,
     mock_vision_tables,
     run_pipeline,
@@ -139,3 +142,197 @@ def _with_rows(df, rows, spark):
     base = df.collect()[0].asDict()
     base["rows"] = rows
     return spark.createDataFrame([tuple(base[f.name] for f in TABLE_SCHEMA)], TABLE_SCHEMA)
+
+
+# ---------------------------------------------------------------------------
+# The result contract and the plan shape
+# ---------------------------------------------------------------------------
+
+RESULT_SCHEMA = (
+    "struct<key:string,"
+    "metadata:struct<source_file:string,pipeline_version:string,"
+    "extraction_method:string,vision_model:string>,"
+    "verification:struct<status:string,confidence:double,"
+    "resolution_method:string,conflict_count:bigint>,"
+    "tables:array<struct<table_id:string,title:string,headers:array<string>,"
+    "rows:array<map<string,string>>,confidence:double,extraction_method:string,"
+    "model:string,cost_usd:double>>,"
+    "parameters_json:string,"
+    "conflicts:array<struct<field:string,vision_value:string,rule_value:string,"
+    "severity:string,resolution:string,resolved_value:string>>>"
+)
+
+
+def test_result_schema_is_pinned(spark):
+    """Exporters and the CLI read result JSON back with this schema."""
+    result, _ = run_pipeline(spark)
+    assert result.schema.simpleString() == RESULT_SCHEMA
+
+
+def test_one_pass_plan_over_parquet_inputs(spark, tmp_path):
+    """Verification and result assembly read each input once: one
+    FileScan per input and at most two Exchanges (group the rule side
+    by key, join it to vision)."""
+    import re
+
+    vpath, rpath = str(tmp_path / "vision"), str(tmp_path / "rule")
+    mock_vision_tables(spark).write.parquet(vpath)
+    mock_rule_tables(spark).write.parquet(rpath)
+    result, _ = run_pipeline(spark, spark.read.parquet(vpath), spark.read.parquet(rpath))
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    # each input needs at least one scan, so two scans is one per input
+    assert len(re.findall(r"FileScan parquet", plan)) == 2, plan
+    assert len(re.findall(r"Exchange", plan)) <= 2, plan
+
+
+# ---------------------------------------------------------------------------
+# Edge cases
+# ---------------------------------------------------------------------------
+
+
+def _table(spark, key, table_id, rows, headers=None, title="Electrical Characteristics"):
+    from datasheet_etl_spark.pipeline import TABLE_SCHEMA
+
+    return spark.createDataFrame(
+        [(key, table_id, title, headers or _EC_HEADERS, rows, 0.9, "vision", "m", 0.0)],
+        TABLE_SCHEMA,
+    )
+
+
+_EC_HEADERS = ["Parameter", "Min", "Max", "Unit"]
+
+
+def _cell_row(name, mn, mx, unit):
+    return {"Parameter": name, "Min": mn, "Max": mx, "Unit": unit}
+
+
+def _result_json(result):
+    """Result records as the JSON sink writes them (map entries in order)."""
+    return [
+        json.loads(r[0]) for r in result.select(F.to_json(F.struct("*"))).collect()
+    ]
+
+
+def test_unit_conflict_rule_wins_and_is_patched_in_header_order(spark):
+    rows = [_cell_row("Output Voltage", "0.6", "28", "V")]
+    rows[0]["Note"] = "adj"  # not a header: sorts after the header keys
+    # a rule-only key conflicts against '' but is never patched in
+    rule_rows = [dict(rows[0], Unit="mV", Typ="1.2")]
+    vision = _table(spark, "d", "t1", rows)
+    rule = _table(spark, "d", "t1", rule_rows)
+    result, vr = run_pipeline(spark, vision, rule)
+    got = sorted(
+        (c["field"], c["vision_value"], c["conflict_type"], c["resolution"], c["resolved_value"])
+        for c in vr.conflicts.collect()
+    )
+    assert got == [
+        ("row[0].Typ", "", "text", "vision_wins", ""),
+        ("row[0].Unit", "V", "unit", "rule_wins", "mV"),
+    ]
+    [rec] = _result_json(result)
+    [row] = rec["tables"][0]["rows"]
+    assert list(row) == ["Parameter", "Min", "Max", "Unit", "Note"]
+    assert row["Unit"] == "mV"
+    assert json.loads(rec["parameters_json"])["output_voltage_unit"] == "mV"
+    assert [c["severity"] for c in rec["conflicts"]] == ["low", "low"]
+
+
+def test_empty_and_null_row_maps_are_dropped(spark):
+    a, b = _cell_row("Output Current", "", "3", "A"), _cell_row("Efficiency", "", "92", "%")
+    rows = [a, {}, None, b]
+    result, vr = run_pipeline(spark, _table(spark, "d", "t", rows), _table(spark, "d", "t", rows))
+    [rec] = _result_json(result)
+    assert rec["tables"][0]["rows"] == [a, b]
+    assert rec["verification"]["resolution_method"] == "perfect_match"
+    # parameter positions follow the kept rows
+    params = extract_parameters(vr.final_tables).orderBy("pos", "param").collect()
+    assert [(p["pos"], p["param"]) for p in params] == [
+        (0, "output_current_max"), (0, "output_current_unit"),
+        (1, "efficiency_max"), (1, "efficiency_unit"),
+    ]
+
+
+@pytest.mark.parametrize("rows", [[], None])
+def test_rowless_table_yields_empty_rows(spark, rows):
+    result, _ = run_pipeline(
+        spark, _table(spark, "d", "t", rows), _table(spark, "d", "t", rows)
+    )
+    [rec] = _result_json(result)
+    assert rec["tables"][0]["rows"] == []
+    assert "parameters_json" not in rec  # null: dropped by the JSON writer
+    assert rec["verification"]["resolution_method"] == "perfect_match"
+
+
+def test_two_rule_tables_conflict_per_pair(spark):
+    rows = [_cell_row("Output Current", "", "3", "A")]
+    vision = _table(spark, "d", "vision_table_1", rows)
+    rule = _table(spark, "d", "rule_table_1", rows).unionByName(
+        _table(spark, "d", "rule_table_2", [dict(rows[0], Max="5")])
+    )
+    result, vr = run_pipeline(spark, vision, rule)
+    got = sorted((c["field"], c["rule_value"]) for c in vr.conflicts.collect())
+    assert got == [
+        ("row[0].Max", "5"),
+        ("table_id", "rule_table_1"),
+        ("table_id", "rule_table_2"),
+    ]
+    [rec] = _result_json(result)
+    assert rec["verification"]["conflict_count"] == 3
+    assert [c["field"] for c in rec["conflicts"]] == ["row[0].Max", "table_id", "table_id"]
+
+
+def test_repeated_vision_key_verifies_each_vision_table(spark):
+    """Two vision tables under one key: one result row per vision table,
+    each verified against every rule table of its key."""
+    rows = [_cell_row("Output Current", "", "3", "A")]
+    vision = _table(spark, "d", "t_a", rows).unionByName(
+        _table(spark, "d", "t_b", [dict(rows[0], Max="4")])
+    )
+    rule = _table(spark, "d", "", rows)  # empty table_id: no metadata conflict
+    result, vr = run_pipeline(spark, vision, rule)
+    by_id = {r["tables"][0]["table_id"]: r for r in _result_json(result)}
+    assert set(by_id) == {"t_a", "t_b"}
+    assert by_id["t_a"]["verification"]["resolution_method"] == "perfect_match"
+    assert by_id["t_a"]["conflicts"] == []
+    assert by_id["t_b"]["verification"]["conflict_count"] == 1
+    assert [c["field"] for c in by_id["t_b"]["conflicts"]] == ["row[0].Max"]
+    assert by_id["t_b"]["tables"][0]["rows"] == [dict(rows[0], Max="4")]
+    assert vr.verdicts.count() == 2
+
+
+# ---------------------------------------------------------------------------
+# Graded against planted conflicts
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("seed", [11, 29])
+def test_pipeline_finds_planted_conflicts(spark, tmp_path, seed):
+    """A seeded corpus with planted discrepancies: every planted conflict
+    surfaces exactly once, nothing else does (the benchmark's grader)."""
+    from perfbench import corpus as corpus_mod
+
+    from datasheet_etl_spark.pipeline import TABLE_SCHEMA, write_result_json
+    from datasheet_etl_spark.sources.pdf_bridge import PAGE_SCHEMA, lift_page_tables
+
+    corpus = corpus_mod.generate(seed, 30)
+    staged = {
+        "vision": spark.createDataFrame(corpus.vision, TABLE_SCHEMA).unionByName(
+            mock_vision_tables(spark)
+        ),
+        "pages": spark.createDataFrame(corpus.pages, PAGE_SCHEMA),
+        "golden_rule": mock_rule_tables(spark),
+    }
+    for name, df in staged.items():
+        df.write.parquet(str(tmp_path / name))
+    read = lambda name: spark.read.parquet(str(tmp_path / name))  # noqa: E731
+    rule = lift_page_tables(read("pages")).unionByName(read("golden_rule"))
+    result, _ = run_pipeline(spark, read("vision"), rule)
+    out = str(tmp_path / "result")
+    write_result_json(result, out)
+    records = [
+        json.loads(line)
+        for part in sorted(glob.glob(os.path.join(out, "part-*")))
+        for line in open(part, encoding="utf-8")
+    ]
+    assert corpus_mod.check_results(corpus, records) == []
+    assert sum(len(r["conflicts"]) for r in records) > 0
